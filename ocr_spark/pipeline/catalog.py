@@ -15,8 +15,9 @@ Iceberg-shaped; this module makes the swap a CODE PATH instead of prose:
   failing later inside the JVM with a ClassNotFoundException.
 
 The guard is unit-tested both ways (absent -> raise with instructions,
-present -> pass) via the ``OCR_SPARK_ICEBERG_JARS_DIR`` override; the
-``writeTo`` branch itself is only reachable on a cluster with the jar.
+present -> pass) via the ``OCR_SPARK_ICEBERG_JARS_DIR`` override, and the
+commit helpers' create-or-write choice against a stub session; the
+``writeTo`` calls themselves only run on a cluster with the jar.
 """
 
 from __future__ import annotations
@@ -129,11 +130,9 @@ def configure_iceberg(builder, warehouse: str, catalog_name: str = "ocr",
 def iceberg_append(df, table: str) -> None:
     """Append with create-on-first-write (Iceberg's append requires an
     existing table; the first wave of a fresh run creates it)."""
-    try:
+    if df.sparkSession.catalog.tableExists(table):
         df.writeTo(table).append()
-    except Exception as e:  # TABLE_OR_VIEW_NOT_FOUND on the first wave
-        if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-            raise
+    else:
         df.writeTo(table).create()
 
 
@@ -143,9 +142,7 @@ def iceberg_overwrite_buckets(df, table: str) -> None:
     pre-delete of stale dirs needed, the snapshot swap is the commit)."""
     from pyspark.sql import functions as F
 
-    try:
+    if df.sparkSession.catalog.tableExists(table):
         df.writeTo(table).overwritePartitions()
-    except Exception as e:
-        if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-            raise
+    else:
         df.writeTo(table).partitionedBy(F.col("bucket")).create()

@@ -7,15 +7,19 @@ Scale design (north rule: 10^12 docs, N vs 4N executors):
   media_ref equi-join (AQE picks broadcast vs shuffle; skew-join enabled).
 * Cost classes are routed separately — a media span costs ~100x a text
   span, so they never share a task boundary.
-* Skew defusal: after the media join, rows are hash-repartitioned on
-  (doc_id, ord); a document with 10^3 media spans spreads over the whole
-  cluster instead of stalling one task (explicit salt; AQE skew-join is the
-  backstop for the join itself).
+* Skew defusal: each expensive kernel (OCR, PDF) runs once per DISTINCT
+  media_ref, over an explicit-width shuffle salted on crc32(media_ref), and
+  its output is shuffle-joined back to the span rows; a document with 10^3
+  media spans, or one hot ref shared by many documents, spreads over the
+  whole cluster instead of stalling one task (AQE skew-join is the backstop
+  for the join itself).
 * Resume: the doc space is split into `buckets` by crc32(doc_id); each
   bucket writes to its own spans/bucket=K dir with overwrite semantics and
   then commits one manifest row (lineage + metrics + checksum). A rerun
   skips committed buckets and safely rewrites half-written ones — append-only
-  Iceberg-style commit protocol on plain parquet.
+  Iceberg-style commit protocol on plain parquet. The commit shuffle
+  rebalances on the bucket column, so a bucket lands as one file, or as
+  advisory-sized files once it outgrows one.
 """
 
 from __future__ import annotations
@@ -385,15 +389,18 @@ def extract(
 
         bucket_of = F.crc32(F.col("doc_id")) % buckets
         subset = docs.where(bucket_of.isin(wave))
-        # one shuffle collapses the tiny output rows to one file per bucket
-        # BEFORE the committer: a partitionBy write from W wide partitions
-        # creates W x |wave| files whose dynamic-overwrite commit is
-        # driver-serial — file count, not data size, was the scaling ceiling
+        # rebalance on the partition column alone: every task writes one
+        # file per bucket it holds, so a bucket of at most the advisory
+        # partition size lands as ONE file, and AQE splits a larger bucket
+        # into advisory-sized files. Never hash on (bucket, doc_id): every
+        # task would hold rows of every bucket, giving tasks x buckets
+        # files, all listed one by one by the dynamic-overwrite commit
+        # and opened again by the stats read-back below
         out = (
             extract_spans(subset, media, character_spacing, salt=salt,
                           partitions=partitions, pdfs=pdfs, fonts=fonts)
-            .withColumn("bucket", (F.crc32(F.col("doc_id")) % buckets).cast("int"))
-            .repartition(max(4 * len(wave), 1), "bucket", "doc_id")
+            .withColumn("bucket", bucket_of.cast("int"))
+            .hint("rebalance", "bucket")
         )
         mark("plan")
         if catalog is not None:

@@ -53,7 +53,11 @@ def stream_extract(
         out = extract_spans(batch_df, media, character_spacing=character_spacing,
                             pdfs=pdfs, fonts=fonts)
         (
+            # rebalance on the partition column: the batch lands as one
+            # file (advisory-sized files once it outgrows one), not one
+            # file per upstream partition
             out.withColumn("batch_id", F.lit(batch_id))
+            .hint("rebalance", "batch_id")
             .write.mode("overwrite")
             .partitionBy("batch_id")
             .parquet(f"{output_dir}/spans")

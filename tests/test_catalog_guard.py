@@ -3,6 +3,7 @@ the whole point is that the failure happens BEFORE session spin-up, with
 actionable swap instructions."""
 
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -70,3 +71,46 @@ def test_cli_catalog_iceberg_fails_fast(monkeypatch, tmp_path):
             "--output", str(tmp_path / "out"),
             "--catalog", "iceberg",
         ])
+
+
+class _StubFrame:
+    """Stands in for a DataFrame and for the writer its writeTo() returns:
+    its session's catalog answers tableExists from ``existing``, and every
+    write call is recorded."""
+
+    def __init__(self, existing):
+        self.calls = []
+        self.sparkSession = SimpleNamespace(
+            catalog=SimpleNamespace(tableExists=lambda t: t in existing)
+        )
+
+    def writeTo(self, table):
+        self.calls.append(table)
+        return self
+
+    def partitionedBy(self, col):
+        self.calls.append(("partitionedBy", col))
+        return self
+
+    def __getattr__(self, op):  # append / create / overwritePartitions
+        return lambda: self.calls.append(op)
+
+
+@pytest.mark.parametrize("exists", [True, False])
+def test_iceberg_commit_helpers_probe_table_existence(exists, monkeypatch):
+    """Create on the first wave, append / overwrite after it — decided by a
+    catalog probe, not by the wording of a failed write's exception."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.pipeline.catalog import iceberg_append, iceberg_overwrite_buckets
+
+    monkeypatch.setattr(F, "col", lambda name: name)  # F.col needs a live SparkContext
+    df = _StubFrame({"ocr.manifest", "ocr.spans"} if exists else set())
+    iceberg_append(df, "ocr.manifest")
+    iceberg_overwrite_buckets(df, "ocr.spans")
+    if exists:
+        assert df.calls == ["ocr.manifest", "append", "ocr.spans", "overwritePartitions"]
+    else:
+        assert df.calls == [
+            "ocr.manifest", "create", "ocr.spans", ("partitionedBy", "bucket"), "create",
+        ]

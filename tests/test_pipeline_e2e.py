@@ -1,6 +1,7 @@
 """End-to-end Spark pipeline tests: span-sequence equality vs the oracle
 table, resume idempotency, skew handling, deterministic parallelism."""
 
+import glob
 import os
 import shutil
 import subprocess
@@ -90,6 +91,33 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
     got = _spans_set(read_output(spark, out_dir))
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert got == expected  # (kind, text, media_ref, order) per doc, 100%
+
+    # the commit shuffle rebalances on the bucket column: a bucket under the
+    # advisory partition size lands as exactly one data file, not one per
+    # write task
+    for b in range(4):
+        files = glob.glob(f"{out_dir}/spans/bucket={b}/*.parquet")
+        assert len(files) == 1, (b, files)
+
+
+def test_bucket_over_advisory_size_splits_into_several_files(spark, corpus, tmp_path):
+    """The other half of the rebalance contract: a bucket larger than the
+    advisory partition size is split across writer tasks (several files)
+    instead of funnelling through one task."""
+    from ocr_spark.pipeline.job import extract, read_output
+
+    out_dir = str(tmp_path / "out_split")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        extract(spark, corpus, out_dir, buckets=4)
+    finally:
+        spark.conf.set(key, old)
+    for b in range(4):
+        assert len(glob.glob(f"{out_dir}/spans/bucket={b}/*.parquet")) > 1, b
+    expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
+    assert _spans_set(read_output(spark, out_dir)) == expected
 
 
 def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):

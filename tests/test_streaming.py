@@ -75,6 +75,12 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     got = _spans_set(spark.read.parquet(f"{out_dir}/spans"))
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert got == expected
+    # each micro-batch is rebalanced on batch_id: one data file per batch,
+    # not one per upstream partition
+    batch_dirs = glob.glob(f"{out_dir}/spans/batch_id=*")
+    assert len(batch_dirs) == 2
+    for d in batch_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
 
     # restart with no new files: no duplicates (checkpoint resume)
     q2 = stream_extract(
