@@ -274,30 +274,21 @@ def extract_spans(
     return out
 
 
-def _read_committed(spark: SparkSession, manifest_dir: str) -> set[int]:
-    try:
+def _read_committed(spark: SparkSession, manifest_dir: str, catalog: str | None) -> set[int]:
+    """Buckets with a committed manifest row. Only a manifest that does not
+    exist yet means a fresh run; any other read error (a corrupt part file,
+    an unreachable catalog) propagates instead of silently rewriting every
+    bucket."""
+    if catalog is not None:
+        table = f"{catalog}.manifest"
+        if not spark.catalog.tableExists(table):
+            return set()
+        m = spark.table(table)
+    else:
         hpath, fs = _hadoop_fs(spark, manifest_dir)
         if not fs.exists(hpath):
             return set()
         m = spark.read.schema(MANIFEST).parquet(manifest_dir)
-        return {
-            r.partition_id
-            for r in m.where(F.col("status") == "committed")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        }
-    except Exception:
-        return set()
-
-
-def _read_committed_table(spark: SparkSession, table: str) -> set[int]:
-    """Catalog-mode twin of _read_committed: a missing table (fresh run,
-    created by the first wave's append) means nothing is committed."""
-    try:
-        m = spark.table(table)
-    except Exception:
-        return set()
     return {
         r.partition_id
         for r in m.where(F.col("status") == "committed")
@@ -348,7 +339,6 @@ def extract(
     ``writeTo(...).append()``; reads go through ``spark.table``. The wave
     loop, commit unit, and resume semantics are identical in both modes.
     """
-    import os as _os
     import re as _re
 
     # run_id lands inside a SQL VALUES literal (manifest commit below):
@@ -359,26 +349,13 @@ def extract(
             "embedded in the manifest SQL literal and in output paths"
         )
 
-    trace = _os.environ.get("OCR_SPARK_TIMING") == "1"
-    marks = [("start", time.perf_counter())]
-
-    def mark(name):
-        if trace:
-            marks.append((name, time.perf_counter()))
-
     docs = read_documents(spark, input_dir)
     media = read_media(spark, input_dir)
     pdfs = read_pdfs(spark, input_dir)
     manifest_dir = f"{output_dir}/_manifest"
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    if not resume:
-        committed = set()
-    elif catalog is not None:
-        committed = _read_committed_table(spark, f"{catalog}.manifest")
-    else:
-        committed = _read_committed(spark, manifest_dir)
-    mark("read_committed")
+    committed = _read_committed(spark, manifest_dir, catalog) if resume else set()
     pending = [b for b in range(buckets) if b not in committed]
     metrics = {"buckets_total": buckets, "buckets_skipped": len(committed), "spans": 0}
 
@@ -402,13 +379,11 @@ def extract(
             .withColumn("bucket", bucket_of.cast("int"))
             .hint("rebalance", "bucket")
         )
-        mark("plan")
         if catalog is not None:
             # Iceberg: the snapshot swap is atomic per commit, so stale
             # half-written buckets cannot exist — no pre-delete needed
             from .catalog import iceberg_overwrite_buckets
 
-            mark("delete")
             iceberg_overwrite_buckets(out, f"{catalog}.spans")
         else:
             # dynamic overwrite only replaces partitions present in the new
@@ -416,11 +391,9 @@ def extract(
             # end empty
             for b in wave:
                 _hadoop_delete(spark, f"{output_dir}/spans/bucket={b}")
-            mark("delete")
             out.write.mode("overwrite").partitionBy("bucket").parquet(
                 f"{output_dir}/spans"
             )
-        mark("write")
 
         # manifest stats come from READING BACK the written files — cheaper
         # than persisting the whole output through the write (measured), and
@@ -462,7 +435,6 @@ def extract(
             )
             .collect()
         }
-        mark("stats")
 
         now = time.strftime("%Y-%m-%dT%H:%M:%S")
         values = []
@@ -494,15 +466,11 @@ def extract(
             iceberg_append(manifest_df.coalesce(1), f"{catalog}.manifest")
         else:
             manifest_df.coalesce(1).write.mode("append").parquet(manifest_dir)
-        mark("manifest")
         done += len(wave)
         if fail_after is not None and done >= fail_after:
             raise RuntimeError(f"injected failure after {done} buckets")
 
     metrics["buckets_done"] = done
-    if trace:
-        for (_, t0), (name, t1) in zip(marks, marks[1:]):
-            print(f"TIMING {name} {t1 - t0:.2f}")
     return metrics
 
 

@@ -114,3 +114,46 @@ def test_iceberg_commit_helpers_probe_table_existence(exists, monkeypatch):
         assert df.calls == [
             "ocr.manifest", "create", "ocr.spans", ("partitionedBy", "bucket"), "create",
         ]
+
+
+class _StubManifestSession:
+    """A session whose catalog holds ``ocr.manifest`` when ``rows`` is not
+    None; reading the table raises when ``rows`` is an exception."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.catalog = SimpleNamespace(
+            tableExists=lambda t: rows is not None and t == "ocr.manifest"
+        )
+
+    def table(self, name):
+        if isinstance(self.rows, Exception):
+            raise self.rows
+        return self
+
+    def where(self, cond):
+        return self
+
+    def select(self, *cols):
+        return self
+
+    def distinct(self):
+        return self
+
+    def collect(self):
+        return [SimpleNamespace(partition_id=b) for b in self.rows]
+
+
+def test_resume_reads_the_catalog_manifest(monkeypatch):
+    """Catalog mode: a missing manifest table is a fresh run, an existing
+    one yields its committed buckets, and any other read error propagates
+    instead of passing for a fresh run."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.pipeline.job import _read_committed
+
+    monkeypatch.setattr(F, "col", lambda name: name)  # F.col needs a live SparkContext
+    assert _read_committed(_StubManifestSession(None), "unused", "ocr") == set()
+    assert _read_committed(_StubManifestSession([0, 2, 2]), "unused", "ocr") == {0, 2}
+    with pytest.raises(OSError, match="catalog unreachable"):
+        _read_committed(_StubManifestSession(OSError("catalog unreachable")), "unused", "ocr")

@@ -183,6 +183,22 @@ def test_resume_is_idempotent(spark, corpus, tmp_path):
     assert m.agg(F.sum("span_count")).collect()[0][0] == len(expected)
 
 
+def test_resume_over_corrupt_manifest_raises(spark, corpus, tmp_path):
+    """Only a missing manifest means a fresh run: a truncated manifest part
+    file must fail the resume, not silently rewrite every bucket."""
+    from ocr_spark.pipeline.job import extract
+
+    out_dir = str(tmp_path / "out_corrupt")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        extract(spark, corpus, out_dir, buckets=2, fail_after=1)
+    (part,) = glob.glob(f"{out_dir}/_manifest/part-*.parquet")
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(Exception) as exc:
+        extract(spark, corpus, out_dir, buckets=2)
+    assert "injected failure" not in str(exc.value)
+
+
 def test_rerun_after_partial_write_no_dupes(spark, corpus, tmp_path):
     """Kill between parquet write and manifest commit -> bucket rewritten."""
     from ocr_spark.pipeline.job import extract, extract_spans, read_documents, read_media, read_output
